@@ -7,13 +7,14 @@ threads=32 on the sf0.1 parquet).
 Usage: check_ratios.py <bench.json> [--floor SECONDS] [--gate RATIO]
                                     [--slow SECONDS]
 
-Accepts any of the three bench shapes: bench_full.json
-({"queries": {name: sec}}), a raw Bench driver line
-({"queries_ms": {name: ms}, "fast": {...}}), or a driver BENCH_rN.json
-envelope ({"parsed": <driver line>}). Queries folded into the driver
-line's "fast" bucket carry no per-query time there — run against
-bench_full.json for full coverage (a note reports how many were
-skipped).
+Accepts any of these bench shapes: bench_full.json
+({"queries": {name: sec}}), a Bench driver line in either form
+({"queries": {name: sec}, "fast": {...}} or
+{"queries_ms": {name: ms}, "fast": {...}}), or a driver BENCH_rN.json
+envelope ({"parsed": <driver line>}). A driver line itemizes only its
+slow queries; those folded into its "fast" bucket carry no per-query
+time there — run against bench_full.json for full coverage (a note
+reports how many were skipped).
 
 The aggregate 2x gate is the driver's; this makes it bind per query so a
 single regression can't hide inside the total. Queries where DuckDB
@@ -48,8 +49,9 @@ def main():
     if "parsed" in bench:  # driver BENCH_rN.json envelope
         bench = bench["parsed"]
     unbenched = 0
-    if "queries" in bench:          # bench_full.json: seconds, every query
+    if "queries" in bench:          # seconds; a driver line adds "fast"
         sp = bench["queries"]
+        unbenched = bench.get("fast", {}).get("n", 0)
     elif "queries_ms" in bench:     # driver line: ms ints + "fast" bucket
         sp = {n: ms / 1000.0 for n, ms in bench["queries_ms"].items()}
         unbenched = bench.get("fast", {}).get("n", 0)

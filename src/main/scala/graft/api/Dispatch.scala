@@ -32,8 +32,9 @@ import org.apache.spark.sql.functions._
   *     size, buffered exact quantiles (one sorted buffer per group)
   *     and window scans (one task per group) escalate to the
   *     distributed bracket-search / boundary-carry tiers. QdistProbe:
-  *     buffered wins at 5M pairs/group, loses (or OOMs) at 20M;
-  *     ScanTierProbe: carry ffill 2.5× at 20M rows/group.
+  *     buffered wins at 5M pairs/group, loses (or OOMs) at 20M; the
+  *     carry ffill ran 2.5× faster than the window ffill at 20M
+  *     rows/group (60M rows, 3 groups, local[32]: 39.9 s vs 100.1 s).
   *   - [[HotKeyShare]] (default 0.10): at double-digit key
   *     concentration the events operators escalate to the time-block
   *     decompositions (SkewProbe: 11× for rolling at 30% hot key;

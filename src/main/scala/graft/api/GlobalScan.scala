@@ -1,257 +1,145 @@
 package graft.api
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField}
+import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType, StructField, StructType}
 
-/** Global (corpus-wide, totally-ordered) prefix scans WITHOUT a
-  * single-partition window.
+/** Global and per-group prefix scans that never put a group on one
+  * task.
   *
   * `Window.orderBy(...)` with no partitionBy funnels every row through
-  * ONE task — the canonical local-mode-passes / cluster-falls-over trap
-  * (Spark even warns `WARN WindowExec: No Partition Defined`). The
-  * scale-correct shape is the textbook two-pass distributed prefix sum:
+  * ONE task, and `Window.partitionBy(g)` puts each group on one task —
+  * 5 corpus-spanning strata at 100 TB are 5 tasks doing all the work.
+  * Every scan here is one kernel, the two-pass distributed scan:
   *
-  *   1. range-repartition on the order key and sort within partitions
-  *      (range partitions are globally ordered: every row in partition i
-  *      sorts before every row in partition i+1);
-  *   2. pass 1 — per-partition totals, #partitions scalars to the driver
-  *      (the ONLY driver traffic, same contract as the connected-
-  *      components convergence probe);
-  *   3. pass 2 — map-only: each partition streams rows adding its
-  *      broadcast exclusive offset to a running local sum.
+  *   1. range-repartition on (group, order) and sort within partitions
+  *      (range partitions are globally ordered, so a group spreads over
+  *      consecutive partitions), pinned with a local checkpoint;
+  *   2. pass 1 — per partition, the first and last group key and the
+  *      last group's folded state: O(#partitions) driver traffic,
+  *      never per-group or per-row;
+  *   3. the driver chains those into the state each partition's first
+  *      group carries in from the left;
+  *   4. pass 2 — map-only: each partition replays the fold from its
+  *      carried-in state and appends the running state as a column.
   *
-  * The range-parted data is pinned with `localCheckpoint` between the
-  * two passes: `repartitionByRange` picks boundaries by sampling, so an
-  * unpinned plan could recompute with DIFFERENT partition boundaries in
-  * pass 2 and pair rows with the wrong offsets. The checkpoint is also
-  * what the result reads from, so the scan's input is materialized
-  * exactly once. EAGER, like `Dedup.connectedComponents`: construction
-  * runs the checkpoint + pass-1 jobs. Checkpoint blocks free when the
-  * result is GC'd, or deterministically via [[Caches.release]].
+  * The pin matters for correctness, not just cost: range partitioning
+  * samples its boundaries, so an unpinned plan could recompute with
+  * different boundaries in pass 2 and pair rows with the wrong carries.
+  * The checkpoint is also what the result reads from, so the input is
+  * materialized exactly once. EAGER, like `Dedup.connectedComponents`:
+  * construction runs the checkpoint and pass-1 jobs. Checkpoint blocks
+  * free when the result is GC'd, or deterministically via
+  * [[Caches.release]].
   *
-  * At 100 TB: one full shuffle (range exchange), one materialization to
-  * executor memory/disk, one map-only pass — no further shuffles and no
-  * row ever crosses to the driver. This is the same plan a distributed
-  * sort runs, plus a map.
+  * At 100 TB: one range exchange, one pin, O(#partitions) values to the
+  * driver, one map-only pass — the plan of a distributed sort plus a
+  * map. With no group columns the whole corpus is one group, so the
+  * same chain yields per-partition offsets (global row numbers and
+  * prefix sums — sequence packing, global ranking).
   *
-  * The reference's scans (`flox/scan.py:101`, Blelloch combine at
-  * `flox/aggregations.py:849-876`) are per-GROUP cumulatives — covered
-  * by [[GroupByScan]]'s partitioned windows. GlobalScan is the
-  * complementary pipeline primitive (sequence packing, global ranking)
-  * where the "group" is the whole corpus.
+  * `order` must totally order rows within each group (include a unique
+  * tiebreak key): rows that compare equal could otherwise swap running
+  * values between runs. Group keys compare as Spark grouping does (NaN
+  * equals NaN, −0.0 equals 0.0), so every scan agrees with the window
+  * tier ([[GroupByScan]]) on float keys.
   */
 object GlobalScan {
 
   /** Inclusive prefix sum of `valueCol` (cast to long, null = 0) over
-    * the total order given by `order`, appended as `outCol`.
-    *
-    * `order` must be a total order (include a unique tiebreak key) for
-    * the result to be deterministic — rows that compare equal could
-    * otherwise swap running-sum values between runs.
-    */
+    * the total order given by `order`, appended as `outCol`. A sum that
+    * crosses 2^63 raises ArithmeticException instead of wrapping. */
   def prefixSum(df: DataFrame, order: Seq[Column], valueCol: Column,
-                outCol: String): DataFrame = {
-    require(!df.columns.contains("__v"), "input already has a __v column")
-    val spark = df.sparkSession
-    val vIdx = df.schema.length // appended __v position
-    val staged = df.withColumn("__v", coalesce(valueCol.cast("long"), lit(0L)))
-    val parted = staged
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, order: _*)
-      .sortWithinPartitions(order: _*)
-      .localCheckpoint() // pin sampled range boundaries between passes
-    // pass 1: per-partition totals — #partitions longs to the driver.
-    // addExact everywhere a running long accumulates: a sum crossing
-    // 2^63 must RAISE (ArithmeticException → loud task failure), never
-    // wrap into a silently wrong prefix (r14 verdict #5 — the
-    // weightedQuantileDistributed weight CDF rides this sum).
-    // Both passes run on InternalRow (r22, guide §4): the old
-    // `parted.rdd` converted every row to an external Row in BOTH
-    // passes, and pass 2 additionally allocated Seq+Row per row and
-    // re-encoded everything through createDataFrame — three per-row
-    // costs on the full-corpus pass that carry no information (the
-    // long is the same bits either way; ProbeMain prices the ceiling).
-    val totals = parted.queryExecution.toRdd
-      .mapPartitionsWithIndex { (pid, it) =>
-        var s = 0L
-        it.foreach(r => s = Math.addExact(s, r.getLong(vIdx)))
-        Iterator((pid, s))
-      }
-      .collect()
-    val nPart = totals.length
-    val offsets = new Array[Long](math.max(nPart, 1))
-    totals.sortBy(_._1).foreach { case (pid, s) =>
-      if (pid + 1 < nPart) offsets(pid + 1) = s
-    }
-    var i = 1
-    while (i < nPart) {
-      offsets(i) = Math.addExact(offsets(i), offsets(i - 1)); i += 1
-    }
-    val bc = spark.sparkContext.broadcast(offsets)
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ StructField(outCol, LongType, nullable = false))
-    // pass 2: map-only — running local sum + broadcast exclusive
-    // offset, emitted as UnsafeRows (valid-until-next() iterator
-    // contract, the standard InternalRow pipeline discipline)
-    val inFields = df.schema.fields
-    val outRdd = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection}
-      // project the original columns (0..vIdx-1 — __v at vIdx is
-      // REPLACED by the running sum) + the run long appended at vIdx+1
-      // of the joined (input, extra) row
-      val exprs = inFields.zipWithIndex.map { case (f, idx) =>
-        BoundReference(idx, f.dataType, f.nullable)
-      } :+ BoundReference(inFields.length + 1, LongType, nullable = false)
-      val proj = UnsafeProjection.create(exprs)
-      val joined = new JoinedRow
-      val extra = new GenericInternalRow(1)
-      var run = bc.value(pid)
-      it.map { r =>
-        run = Math.addExact(run, r.getLong(vIdx))
-        extra.update(0, run)
-        proj(joined(r, extra)): org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
-      spark, outRdd, outSchema)
-  }
+                outCol: String): DataFrame =
+    longSum(df, Nil, order, valueCol, outCol)
 
-  /** Global 1-based row number over the total order `order` (dense
-    * ranking of the whole corpus without a single-partition window) —
-    * prefix sum of the constant 1. Same determinism contract: `order`
-    * must include a unique tiebreak key.
-    */
+  /** Global 1-based row number over the total order `order` — the
+    * prefix sum of the constant 1. */
   def rowNumber(df: DataFrame, order: Seq[Column], outCol: String): DataFrame =
     prefixSum(df, order, lit(1L), outCol)
 
-  /** Per-GROUP 1-based row number that survives giant groups.
-    *
-    * `Window.partitionBy(group).orderBy(...)` puts each group on ONE
-    * task — correct for flox-style grouping (many modest groups,
-    * [[GroupByScan]]) but a scale trap when a handful of strata span the
-    * corpus: 5 strata at 100 TB = 5 tasks doing all the work. Here rows
-    * are RANGE-partitioned on (group, order) instead, so one group
-    * spreads over many ordered partitions, and ranks are stitched with
-    * boundary-only bookkeeping: within a partition a group's rank is a
-    * running counter (rows arrive sorted); only the group that CROSSES a
-    * partition boundary needs an offset, and a crossing group is by
-    * construction the last group of one partition and the first of the
-    * next. Pass 1 therefore ships 4 scalars per partition to the driver
-    * (first/last group key + their row counts) — never a per-group or
-    * per-row structure — and pass 2 is map-only with the chained offsets
-    * broadcast. Same checkpoint-pinning and eagerness as [[prefixSum]].
-    *
-    * `order` must totally order rows WITHIN each group (unique tiebreak
-    * key), and group columns must not collide with `__grn` internals.
-    */
+  /** Per-GROUP 1-based row number that survives giant groups: equals
+    * `row_number().over(Window.partitionBy(group).orderBy(order))`. */
   def groupedRowNumber(df: DataFrame, groupCols: Seq[String],
                        order: Seq[Column], outCol: String): DataFrame =
-    groupedRunning(df, groupCols, order, None, outCol)
+    groupedPrefixSum(df, groupCols, order, lit(1L), outCol)
 
   /** Per-GROUP inclusive prefix sum of `valueCol` (cast to long, null =
-    * 0) with the same boundary-only bookkeeping as
-    * [[groupedRowNumber]] (which is this scan with value ≡ 1): rows are
-    * range-partitioned on (group, order) so corpus-spanning groups
-    * spread over the cluster, and only the group crossing each
-    * partition boundary carries an offset — 4 scalars per partition to
-    * the driver, never per-group state. */
+    * 0) that survives giant groups; raises on long overflow. */
   def groupedPrefixSum(df: DataFrame, groupCols: Seq[String],
                        order: Seq[Column], valueCol: Column,
-                       outCol: String): DataFrame =
-    groupedRunning(df, groupCols, order, Some(valueCol), outCol)
+                       outCol: String): DataFrame = {
+    require(groupCols.nonEmpty, "groupCols must be non-empty; use prefixSum")
+    longSum(df, groupCols, order, valueCol, outCol)
+  }
 
-  /** Per-GROUP forward fill at UNBOUNDED group size — the §2.2 scan
-    * escalation tier, completing the pattern: [[groupedPrefixSum]] is
-    * the distributed cumsum, this is the distributed ffill.
-    * [[graft.api.GroupByScan]]'s window formulation puts each group on
-    * one task (right below double-digit key concentration, the same
-    * boundary as the events trio); here rows range-partition on
-    * (group, order) and the carry is stitched with boundary-only
-    * bookkeeping: within a partition the fill is a running
-    * last-non-null; only the group CROSSING a partition boundary needs
-    * a carried-in value, and pass 1 ships per partition just the
-    * first/last group keys and each boundary segment's last non-null
-    * value — O(#partitions) driver traffic, never per-group state.
-    * Unlike a distributed double cumsum (whose float summation order
-    * would diverge from the window tier), ffill CARRIES EXACT VALUES,
-    * so this tier is bit-identical to GroupByScan's ffill (spec law).
-    * Null = missing (filled); NaN is a value and fills forward, the
-    * window tier's `last(ignoreNulls)` semantics. Output column takes
-    * the value column's dtype, nullable (a group's leading rows before
-    * any value stay null). `order` must totally order rows within each
-    * group. */
+  /** Per-GROUP forward fill at unbounded group size. Null = missing
+    * (filled); NaN is a value and fills forward — the window tier's
+    * `last(ignoreNulls)` semantics. Exact values carry, so this is
+    * bit-identical to GroupByScan's ffill. Output takes the value
+    * column's dtype, nullable (a group's leading rows before any value
+    * stay null). */
   def groupedFfill(df: DataFrame, groupCols: Seq[String],
                    order: Seq[Column], valueCol: String,
                    outCol: String): DataFrame =
-    groupedCarryScan(df, groupCols, order, valueCol, outCol,
-      (st, v) => if (v != null) v else st)
+    carryScan(df, groupCols, order, valueCol, outCol, fillFold)
 
-  /** Per-GROUP backward fill at unbounded group size — [[groupedFfill]]
-    * run over the REVERSED order (the ffill/bfill reversal duality the
-    * window tier's PropertySpec law pins, applied at the partitioning
-    * level: range-partition on (group asc, order desc) and the forward
-    * carry IS the backward fill). Same exact-value carry, so the tier
-    * is bit-identical to GroupByScan's bfill. `order` columns must be
-    * bare (no .asc/.desc) — the reversal is applied here. */
+  /** Per-GROUP backward fill: [[groupedFfill]] over the reversed order.
+    * `order` columns must be bare (no .asc/.desc) — the reversal is
+    * applied here. */
   def groupedBfill(df: DataFrame, groupCols: Seq[String],
                    order: Seq[Column], valueCol: String,
                    outCol: String): DataFrame =
-    groupedCarryScan(df, groupCols, order.map(_.desc), valueCol, outCol,
-      (st, v) => if (v != null) v else st)
+    carryScan(df, groupCols, order.map(_.desc), valueCol, outCol, fillFold)
 
-  /** Per-GROUP running maximum / minimum at unbounded group size — the
-    * cum_extrema mates of [[groupedFfill]], same boundary-carry
-    * machinery with the fold swapped to Spark's double comparison
-    * (NaN greatest, so a NaN poisons the running max exactly as the
-    * window tier's `max().over(...)` does; nulls are skipped). Exact
-    * values carry, so the tier is bit-identical to the window path. */
+  /** Per-GROUP running maximum / minimum of a DOUBLE column at
+    * unbounded group size, bit-identical to the window tier: nulls are
+    * skipped and a NaN poisons the running value from then on (NaN is
+    * greatest for max; cummin follows np.minimum.accumulate). */
   def groupedCumMax(df: DataFrame, groupCols: Seq[String],
                     order: Seq[Column], valueCol: String,
                     outCol: String): DataFrame = {
     requireDoubleValue(df, valueCol, "groupedCumMax")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol, maxFold(1))
+    carryScan(df, groupCols, order, valueCol, outCol, maxFold(1))
   }
 
   def groupedCumMin(df: DataFrame, groupCols: Seq[String],
                     order: Seq[Column], valueCol: String,
                     outCol: String): DataFrame = {
     requireDoubleValue(df, valueCol, "groupedCumMin")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol, minPoisonFold)
+    carryScan(df, groupCols, order, valueCol, outCol, minPoisonFold)
   }
 
-  /** The extrema folds compare via java.lang.Double.compare on the raw
-    * row value, so a non-double value column would ClassCastException
-    * mid-task — fail fast at plan time instead (groupedFfill/Bfill
-    * accept any dtype; the asymmetry is easy to miss). Callers with
-    * int/float columns cast to double first, same contract as the
-    * scaladoc's double comparison. */
+  /** The extrema folds compare via java.lang.Double.compare on the
+    * value, so a non-double value column would ClassCastException
+    * mid-task — fail fast at plan time instead. Callers with int/float
+    * columns cast to double first. */
   private def requireDoubleValue(df: DataFrame, valueCol: String,
                                  op: String): Unit =
-    require(df.schema(valueCol).dataType ==
-      org.apache.spark.sql.types.DoubleType,
+    require(df.schema(valueCol).dataType == DoubleType,
       s"$op needs a DOUBLE value column (the carry fold compares via " +
         s"Double.compare); '$valueCol' is " +
         s"${df.schema(valueCol).dataType.simpleString} — cast it first")
 
-  /** UNBOUNDED-GROUP tier for a registered custom scan
+  /** Unbounded-group tier for a registered custom scan
     * ([[graft.aggs.CustomScans]]) — flox's generic `scan_binary_op`
-    * machinery (flox/aggregations.py:792-846) exposed through the
-    * registry, closing the asymmetry where only the BUILT-IN scans had
-    * a distributed escalation path (r14 verdict #4). The scan must
-    * declare its associative `fold` (ScanSpec.fold); `reverse` scans
-    * run over the negated order (the bfill duality — `order` columns
-    * must be bare). An `outFinalize` (empty-state encoding adapter,
-    * e.g. cumcount's null→0) is applied map-only after the carry.
+    * machinery (flox/aggregations.py:792-846). The scan must declare its
+    * associative `fold` (ScanSpec.fold); `reverse` scans run over the
+    * negated order (`order` columns must be bare). An `outFinalize`
+    * (empty-state encoding adapter, e.g. cumcount's null→0) is applied
+    * map-only after the carry.
     *
     * Scans with a `finish` post-transform (running fraction of total)
-    * are supported too (r15 verdict missing #2 closed): finish needs
-    * the whole-group operand, which here is a plain hash aggregation
-    * of the SAME agg (partial-agg map-side, safe at any group size)
-    * null-safe-equi-joined back over the carried scan — the group
-    * table has one row per group, so AQE broadcasts it; no group is
-    * ever materialized in one task. Window-tier equivalence holds when
-    * the fold/agg pair is exact (integer monoids, selective carries) —
-    * the registrant's contract, same as the fold itself. */
+    * get their whole-group operand from a plain hash aggregation of the
+    * SAME agg (partial-agg map-side, safe at any group size),
+    * null-safe-equi-joined back over the carried scan; the group table
+    * has one row per group, so AQE broadcasts it. Window-tier
+    * equivalence holds when the fold/agg pair is exact (integer
+    * monoids, selective carries) — the registrant's contract. */
   def groupedCustomScan(df: DataFrame, groupCols: Seq[String],
                         order: Seq[Column], valueCol: String,
                         outCol: String, scanName: String): DataFrame = {
@@ -263,8 +151,8 @@ object GlobalScan {
         "(ScanSpec.fold); only the window tier (GroupByScan) can run it"))
     val ord = if (spec.reverse) order.map(_.desc) else order
     def runTo(out: String): DataFrame = {
-      val raw = groupedCarryScan(df, groupCols, ord, valueCol, out, fold,
-        spec.foldOutType, spec.combine.getOrElse(fold))
+      val raw = carryScan(df, groupCols, ord, valueCol, out, fold,
+        spec.foldOutType, spec.combine)
       spec.outFinalize.map(f => raw.withColumn(out, f(col(out))))
         .getOrElse(raw)
     }
@@ -293,26 +181,30 @@ object GlobalScan {
 
   /** NaN-SKIPPING running extrema at unbounded group size — the
     * nancummax/nancummin mates (np.fmax/fmin.accumulate semantics:
-    * null until the first valid value, NaN values skipped like
-    * nulls), completing the carry tier's §2.2 scan family (r15: the
-    * plain extrema had the tier, the nan* mates ran window-only).
-    * Exact values carry, so bit-identical to the window tier's
-    * `max(when(!isnan(v), v))` formulation (spec law). */
+    * null until the first valid value, NaN values skipped like nulls),
+    * bit-identical to the window tier's `max(when(!isnan(v), v))`. */
   def groupedNanCumMax(df: DataFrame, groupCols: Seq[String],
                        order: Seq[Column], valueCol: String,
                        outCol: String): DataFrame = {
     requireDoubleValue(df, valueCol, "groupedNanCumMax")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol,
-      nanSkipFold(1))
+    carryScan(df, groupCols, order, valueCol, outCol, nanSkipFold(1))
   }
 
   def groupedNanCumMin(df: DataFrame, groupCols: Seq[String],
                        order: Seq[Column], valueCol: String,
                        outCol: String): DataFrame = {
     requireDoubleValue(df, valueCol, "groupedNanCumMin")
-    groupedCarryScan(df, groupCols, order, valueCol, outCol,
-      nanSkipFold(-1))
+    carryScan(df, groupCols, order, valueCol, outCol, nanSkipFold(-1))
   }
+
+  private val fillFold: (Any, Any) => Any = (st, v) => if (v != null) v else st
+
+  /** Long sum: the value is never null (coalesced to 0), and addExact
+    * makes a sum crossing 2^63 RAISE (a loud task failure), never wrap
+    * into a silently wrong prefix. Doubles as its own segment combine. */
+  private val sumFold: (Any, Any) => Any = (st, v) =>
+    if (st == null) v
+    else Math.addExact(st.asInstanceOf[Long], v.asInstanceOf[Long])
 
   /** Spark double-ordering fold (java.lang.Double.compare: NaN
     * greatest, −0.0 < 0.0 — Spark's own total order); `sign` +1 keeps
@@ -330,15 +222,12 @@ object GlobalScan {
 
   /** NaN-POISONING running-min fold — the cumMIN mate. The window tier
     * (GroupByScan 'cummin') implements np.minimum.accumulate: once any
-    * NaN is seen the running min is NaN forever
-    * (`when(bool_or(isnan(v)).over(fwd), NaN)`). A plain
-    * Double.compare fold orders NaN GREATEST, so a later finite value
-    * would replace it — [5.0, NaN, 3.0] gave [5.0, 5.0, 3.0] carried
-    * vs [5.0, NaN, NaN] windowed, flipping results with estimated
-    * group size under scanAuto (the r15 advice-high defect). Nulls
-    * skip; NaN state or value sticks. Selective fold: doubling as the
-    * segment combine is correct (a segment whose state is NaN came
-    * from a segment containing NaN). */
+    * NaN is seen the running min is NaN forever. A plain Double.compare
+    * fold orders NaN GREATEST, so a later finite value would replace it
+    * ([5.0, NaN, 3.0] would give [5.0, 5.0, 3.0] instead of
+    * [5.0, NaN, NaN]). Nulls skip; NaN state or value sticks. Selective
+    * fold: doubling as the segment combine is correct (a segment whose
+    * state is NaN came from a segment containing NaN). */
   private def minPoisonFold: (Any, Any) => Any = (st, v) =>
     if (v == null) st
     else if (st == null) v
@@ -363,198 +252,124 @@ object GlobalScan {
       if (c * sign > 0) v else st
     }
 
-  /** The shared unbounded-group carry scan: `fold` is a null-identity
-    * per-row step (state := fold(state, value), null state = empty);
-    * `combine` merges two segment STATES (null-identity both sides)
-    * and is what lets partition boundaries stitch with O(#partitions)
-    * driver traffic: pass 1 folds each boundary segment locally, the
-    * driver chains carries with `combine`, pass 2 replays the fold
-    * per row starting from the carried-in state. `combine` defaults
-    * to `fold`, which is correct exactly for SELECTIVE folds
-    * (max/min/first/fill — state and value share a domain and the
-    * fold of two states is the concatenation's state); accumulating
-    * folds must pass their own (see ScanSpec.combine). */
-  private def groupedCarryScan(df: DataFrame, groupCols: Seq[String],
-                               order: Seq[Column], valueCol: String,
-                               outCol: String,
-                               fold: (Any, Any) => Any,
-                               outType: Option[org.apache.spark.sql.types.DataType] = None,
-                               combine0: (Any, Any) => Any = null): DataFrame = {
-    val combine: (Any, Any) => Any =
-      if (combine0 != null) combine0 else fold
+  private def longSum(df: DataFrame, groupCols: Seq[String],
+                      order: Seq[Column], valueCol: Column,
+                      outCol: String): DataFrame =
+    scan(df, groupCols, order, coalesce(valueCol.cast(LongType), lit(0L)),
+      StructField(outCol, LongType, nullable = false), sumFold, sumFold)
+
+  /** A carry over the value column's external JVM values. `combine`
+    * defaults to `fold`, which is correct exactly for SELECTIVE folds
+    * (max/min/first/fill: state and value share a domain and the fold
+    * of two states is the concatenation's state); accumulating folds
+    * must pass their own (see ScanSpec.combine). */
+  private def carryScan(df: DataFrame, groupCols: Seq[String],
+                        order: Seq[Column], valueCol: String, outCol: String,
+                        fold: (Any, Any) => Any,
+                        outType: Option[DataType] = None,
+                        combine: Option[(Any, Any) => Any] = None): DataFrame = {
     require(groupCols.nonEmpty, "groupCols must be non-empty")
-    val spark = df.sparkSession
-    val gIdx = groupCols.map(df.schema.fieldIndex)
-    val vIdx = df.schema.fieldIndex(valueCol)
-    val sortCols = groupCols.map(col) ++ order
-    val parted = df
-      .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-      .localCheckpoint() // pin sampled range boundaries between passes
-    def gkey(r: Row): Seq[Any] = gIdx.map(i => r.get(i))
-    // pass 1: per partition — first/last group keys and each boundary
-    // segment's folded state (null = segment holds no value)
-    val bounds = parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val first = it.next()
-        val fk = gkey(first)
-        var fState: Any = fold(null, first.get(vIdx))
-        var lk = fk
-        var lState: Any = fState
-        var sawOther = false
-        it.foreach { r =>
-          val k = gkey(r)
-          val v = r.get(vIdx)
-          if (k == lk) {
-            lState = fold(lState, v)
-            if (!sawOther) fState = lState
-          } else { sawOther = true; lk = k; lState = fold(null, v) }
-        }
-        Iterator((pid, fk, fState, lk, lState))
-      }
-    }.collect().sortBy(_._1)
-    // chain carries: group g entering partition p from the left carries
-    // g's folded state over partitions < p
-    val carries = scala.collection.mutable.Map.empty[(Int, Seq[Any]), Any]
-    var carryKey: Seq[Any] = null
-    var carryVal: Any = null
-    bounds.foreach { case (pid, fk, fState, lk, lState) =>
-      if (carryKey != null && carryKey == fk && carryVal != null)
-        carries((pid, fk)) = carryVal
-      // g = lk's state leaving this partition: when the whole
-      // partition is one group, combine the carried-in state with the
-      // segment fold (fold doubles as the segment combine — the
-      // monoid property the scaladoc names); otherwise the segment
-      // started fresh inside this partition
-      val carryIn: Any =
-        if (carryKey != null && carryKey == fk) carryVal else null
-      val out: Any =
-        if (fk == lk) {
-          if (lState == null) carryIn
-          else if (carryIn == null) lState
-          else combine(carryIn, lState)
-        } else lState
-      carryKey = lk
-      carryVal = out
-    }
-    val bc = spark.sparkContext.broadcast(carries.toMap)
-    val outRdd = parted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var cur: Seq[Any] = null
-      var state: Any = null
-      it.map { r =>
-        val k = gkey(r)
-        if (k != cur) {
-          cur = k
-          state = bc.value.getOrElse((pid, k), null)
-        }
-        state = fold(state, r.get(vIdx))
-        Row.fromSeq(r.toSeq :+ state)
-      }
-    }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+
-        StructField(outCol, outType.getOrElse(df.schema(valueCol).dataType),
-          nullable = true))
-    spark.createDataFrame(outRdd, outSchema)
+    scan(df, groupCols, order, col(valueCol),
+      StructField(outCol, outType.getOrElse(df.schema(valueCol).dataType),
+        nullable = true),
+      fold, combine.getOrElse(fold))
   }
 
-  private def groupedRunning(df: DataFrame, groupCols: Seq[String],
-                             order: Seq[Column], valueCol: Option[Column],
-                             outCol: String): DataFrame = {
-    require(groupCols.nonEmpty, "groupCols must be non-empty; use rowNumber")
+  /** The one two-pass scan kernel. `fold` is a null-identity per-row
+    * step over the value's external JVM type (state := fold(state,
+    * value), null state = empty); `combine` merges two non-empty
+    * segment states and is what stitches partition boundaries. The
+    * running state, converted to `out`'s type by the converter
+    * `createDataFrame` uses, is appended as column `out`.
+    *
+    * The value is materialized into one trailing temp column, so both
+    * passes read the SAME evaluated values from the checkpoint (a
+    * non-deterministic value expression re-evaluated in pass 2 would
+    * desync from pass-1 carries). Both passes run on InternalRow: in a
+    * 60M-row interleaved A/B, dropping the per-row external Row rebuild
+    * and re-encode cut pass 2's time by 20–42%. Group
+    * keys compare as UnsafeRows of the group columns with float keys
+    * normalized as Spark grouping does, COPIED when held across rows
+    * (the scan reuses its row buffer). */
+  private def scan(df: DataFrame, groupCols: Seq[String], order: Seq[Column],
+                   value: Column, out: StructField,
+                   fold: (Any, Any) => Any,
+                   combine: (Any, Any) => Any): DataFrame = {
     val spark = df.sparkSession
-    val gIdx = groupCols.map(df.schema.fieldIndex)
-    // value is materialized as a trailing temp column so both passes
-    // read the SAME evaluated longs from the checkpoint (a non-
-    // deterministic value expression re-evaluating in pass 2 would
-    // desync from pass-1 offsets)
-    val vIdx = df.schema.length
-    val withV = df.withColumn("__grn_v",
-      coalesce(valueCol.getOrElse(lit(1L)).cast(LongType), lit(0L)))
+    val vName = Iterator.iterate("__v")(_ + "_")
+      .find(n => !df.columns.exists(_.equalsIgnoreCase(n))).get
     val sortCols = groupCols.map(col) ++ order
-    val parted = withV
+    val parted = df.withColumn(vName, value)
       .repartitionByRange(spark.sessionState.conf.numShufflePartitions, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
       .localCheckpoint() // pin sampled range boundaries between passes
-    // Both passes run on InternalRow (r22, guide §4 — see [[prefixSum]]
-    // for the rationale; this is the same rewrite). Group keys are
-    // compared and keyed as UnsafeRows of the group columns (byte-wise
-    // equals/hashCode — canonical for every dtype Spark writes,
-    // including the NaN normalization UnsafeRow writers apply), and
-    // COPIED when stored across iterator steps: the scan's UnsafeRow
-    // buffer is reused, so a stored reference would mutate under the
-    // loop (the valid-until-next() contract).
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, GenericInternalRow, JoinedRow, UnsafeProjection, UnsafeRow}
-    val partedSchema = parted.schema
-    def keyProjOf(): UnsafeProjection = UnsafeProjection.create(
-      gIdx.map(i => BoundReference(i, partedSchema.fields(i).dataType,
-        partedSchema.fields(i).nullable): org.apache.spark.sql.catalyst.expressions.Expression).toArray)
-    def gval(r: InternalRow): Long = r.getLong(vIdx)
-    // pass 1: per partition, first/last group key + their in-partition
-    // value sums (middle groups never cross a boundary → offset 0)
-    val bounds = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      if (it.isEmpty) Iterator.empty
+    val rows = parted.queryExecution.toRdd
+    val fields = df.schema.fields
+    val vIdx = fields.length
+    val vType = parted.schema(vIdx).dataType
+    val toScala = CatalystTypeConverters.createToScalaConverter(vType)
+    val keyExprs: Seq[Expression] = groupCols.map(df.schema.fieldIndex).map { i =>
+      val ref = BoundReference(i, fields(i).dataType, fields(i).nullable)
+      if (ref.dataType == FloatType || ref.dataType == DoubleType)
+        NormalizeNaNAndZero(ref)
+      else ref
+    }
+    // folds one sorted partition: the first group starts from carryIn,
+    // every later group from empty
+    class Cursor(carryIn: Any) {
+      private val keyOf = UnsafeProjection.create(keyExprs)
+      var key: UnsafeRow = null
+      var state: Any = carryIn
+      def step(r: InternalRow): Unit = {
+        val k = keyOf(r)
+        if (key == null) key = k.copy()
+        else if (k != key) { key = k.copy(); state = null }
+        state = fold(state, toScala(r.get(vIdx, vType)))
+      }
+    }
+    // pass 1: per partition, first key, last key, last group's state
+    // (collect returns them in partition order)
+    val bounds = rows.mapPartitionsWithIndex { (pid, it) =>
+      if (!it.hasNext) Iterator.empty
       else {
-        val keyProj = keyProjOf()
-        val first = it.next()
-        val fk = keyProj(first).copy()
-        var fCount = gval(first)
-        var lk = fk
-        var lCount = fCount
-        var sawOther = false
-        it.foreach { r =>
-          val k = keyProj(r)
-          if (k == lk) {
-            lCount = Math.addExact(lCount, gval(r))
-            if (!sawOther) fCount = Math.addExact(fCount, gval(r))
-          } else { sawOther = true; lk = k.copy(); lCount = gval(r) }
-        }
-        Iterator((pid, fk, fCount, lk, lCount))
+        val c = new Cursor(null)
+        c.step(it.next())
+        val first = c.key
+        it.foreach(c.step)
+        Iterator((pid, first, c.key, c.state))
       }
-    }.collect().sortBy(_._1)
-    // chain offsets: group g entering partition p from the left gets the
-    // accumulated count of g in partitions < p
-    val offsets = scala.collection.mutable.Map.empty[(Int, UnsafeRow), Long]
-    var carryKey: UnsafeRow = null
-    var carryCount = 0L
-    bounds.foreach { case (pid, fk, fCount, lk, lCount) =>
-      if (carryKey != null && carryKey == fk) offsets((pid, fk)) = carryCount
-      val into = // count of lk so far, including any carried-in prefix
-        if (fk == lk) Math.addExact(fCount,
-          if (carryKey != null && carryKey == fk) carryCount else 0L)
-        else lCount
-      carryKey = lk
-      carryCount = into
+    }.collect()
+    // chain: the state a partition's first group carries in is that
+    // group's state over all partitions to its left
+    val carries = new Array[Any](rows.getNumPartitions)
+    var lastKey: UnsafeRow = null
+    var lastState: Any = null
+    bounds.foreach { case (pid, first, last, st) =>
+      val carryIn = if (first == lastKey) lastState else null
+      carries(pid) = carryIn
+      lastState =
+        if (first != last || carryIn == null) st
+        else if (st == null) carryIn
+        else combine(carryIn, st)
+      lastKey = last
     }
-    val bc = spark.sparkContext.broadcast(offsets.toMap)
-    val inFields = df.schema.fields
-    val outRdd = parted.queryExecution.toRdd.mapPartitionsWithIndex { (pid, it) =>
-      val keyProj = keyProjOf()
-      // drop the trailing __grn_v temp (at vIdx), append the running sum
-      val exprs = inFields.zipWithIndex.map { case (f, idx) =>
-        BoundReference(idx, f.dataType, f.nullable)
-      } :+ BoundReference(inFields.length + 1, LongType, nullable = false)
-      val proj = UnsafeProjection.create(exprs)
+    val bc = spark.sparkContext.broadcast(carries)
+    val toRow = ExpressionEncoder(StructType(Seq(out))).createSerializer()
+    // pass 2: map-only — replay the fold from the carried-in state,
+    // emitting the input columns (temp value dropped) + the state
+    val outExprs = fields.indices.map(i =>
+      BoundReference(i, fields(i).dataType, fields(i).nullable)) :+
+      BoundReference(vIdx + 1, out.dataType, out.nullable)
+    val outRdd = rows.mapPartitionsWithIndex { (pid, it) =>
+      val c = new Cursor(bc.value(pid))
+      val proj = UnsafeProjection.create(outExprs)
       val joined = new JoinedRow
-      val extra = new GenericInternalRow(1)
-      var cur: UnsafeRow = null
-      var run = 0L
       it.map { r =>
-        val k = keyProj(r)
-        if (cur == null || k != cur) {
-          cur = k.copy()
-          run = bc.value.getOrElse((pid, cur), 0L)
-        }
-        run = Math.addExact(run, gval(r))
-        extra.update(0, run)
-        proj(joined(r, extra)): InternalRow
+        c.step(r)
+        proj(joined(r, toRow(Row(c.state)))): InternalRow
       }
     }
-    val outSchema = org.apache.spark.sql.types.StructType(
-      df.schema.fields :+ StructField(outCol, LongType, nullable = false))
     org.apache.spark.sql.GraftSqlBridge.internalCreateDataFrame(
-      spark, outRdd, outSchema)
+      spark, outRdd, StructType(fields :+ out))
   }
 }

@@ -613,6 +613,38 @@ class GlobalScanSpec extends SparkTestBase {
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
   }
 
+  test("float group keys group as the window tier does: NaN is one " +
+    "group, -0.0 and 0.0 are one group (carry and long scans, double " +
+    "and float keys, 3 and 8 partitions)") {
+    val nan = Double.NaN
+    val data = Seq(nan, nan, nan, -0.0, 0.0, -0.0, 0.0).zip(
+        Seq(Some(5.0), None, None, Some(7.0), None, None, None))
+      .zipWithIndex.map { case ((g, v), i) => (g, i, v) }
+    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    try for (parts <- Seq(3, 8); keyType <- Seq("double", "float")) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val df = data.toDF("g", "i", "v")
+        .withColumn("g", col("g").cast(keyType)).repartition(2)
+      val clue = s"shufflePartitions=$parts keys=$keyType"
+      def byI(d: org.apache.spark.sql.DataFrame, out: String): Seq[Any] =
+        d.orderBy("i").select(out).collect().map(_.get(0)).toSeq
+      val w = Window.partitionBy("g").orderBy("i")
+      val ffill = byI(GlobalScan.groupedFfill(df, Seq("g"), Seq(col("i")),
+        "v", "f"), "f")
+      assert(ffill === byI(graft.api.GroupByScan(df, Seq("g"), "v",
+        "ffill", "i", "f"), "f"), clue)
+      assert(ffill === Seq(5.0, 5.0, 5.0, 7.0, 7.0, 7.0, 7.0), clue)
+      val rn = byI(GlobalScan.groupedRowNumber(df, Seq("g"), Seq(col("i")),
+        "rn"), "rn")
+      assert(rn === byI(df.withColumn("rn", row_number().over(w).cast("long")),
+        "rn"), clue)
+      assert(rn === Seq(1L, 2L, 3L, 1L, 2L, 3L, 4L), clue)
+      assert(byI(GlobalScan.groupedPrefixSum(df, Seq("g"), Seq(col("i")),
+          col("v"), "s"), "s") ===
+        byI(df.withColumn("s", sum(col("v").cast("long")).over(w)), "s"), clue)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
   test("packSequences: budget arithmetic, spans, empty docs") {
     val df = Seq((1L, 10L), (2L, 0L), (3L, 70L), (4L, 54L), (5L, 1L))
       .toDF("doc_id", "toks")
