@@ -27,7 +27,7 @@ and disappears at real scale.
 slower than this in ABSOLUTE terms is flagged regardless of its DuckDB
 denominator — a query can be arbitrarily slow yet ratio-clean when
 DuckDB solves it under the floor (q_string_aggs sat at 5.7s for two
-rounds this way). Flagged queries deserve a BenchOne --repeat=5
+rounds this way). Flagged queries deserve a JobStats --repeat=5
 isolation pass; the alarm is REPORT-ONLY by default (a pinned-
 acceptable constant like q_pipeline_e2e's composed-stage cost should
 not fail every run) — pass --slow-fail=1 to make it gate.
@@ -100,7 +100,7 @@ def main():
     slowq = [(n, t) for n, t in sorted(sp.items()) if t > slow]
     slow_fail = opts.get("--slow-fail", "0") not in ("0", "", "false")
     if slowq:
-        print(f"SLOW (> {slow}s absolute, BenchOne-isolate these):")
+        print(f"SLOW (> {slow}s absolute, JobStats-isolate these):")
         for n, t in sorted(slowq, key=lambda x: -x[1]):
             print(f"  {n:26s} spark={t:7.2f}")
     if broken:

@@ -5,10 +5,10 @@ retry (trigger: t > max(3s, 3x pin)).
 
 Usage: make_benchone_pins.py bench_full.json [bench_full2.json ...]
 
-Pin = min over the given runs per query (a warm full sweep is
-steady-state per DESIGN's r7+ warm-pass methodology; min-of-2-sweeps
-approximates the BenchOne --repeat=5 warm min well within the 3x retry
-margin). Existing pins are kept if lower (monotone: a pin only
+Pin = min over the given runs per query (a full sweep after Bench's
+warm pre-pass is steady state — DESIGN.md "Bench methodology";
+min-of-2-sweeps approximates the JobStats --repeat=5 warm min well
+within the 3x retry margin). Existing pins are kept if lower (monotone: a pin only
 improves), and queries new to the sweep get their first pin here.
 """
 import json

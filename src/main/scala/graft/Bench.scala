@@ -89,7 +89,7 @@ object Bench {
     // generated source, which is path-independent), so the timed sweep
     // below measures steady-state throughput — the quantity that
     // extrapolates to a long-lived 100 TB job — instead of billing the
-    // one-time JVM/C2/codegen ramp (~3-5s, BenchOne-measured) to
+    // one-time JVM/C2/codegen ramp (~3-5s, measured per query) to
     // whichever queries sort first alphabetically. Standard JMH-style
     // warm-up; the generic shapes above are kept because they touch the
     // benchmark SF's own parquet footers, which this pass does not.
@@ -140,7 +140,7 @@ object Bench {
     // GC ms and process-CPU-seconds-per-wall-second. The r10 sweep
     // published 198s where steady state is ~80s and nothing on the line
     // let a reader attribute the gap (GC pressure? CPU starvation? page
-    // cache?) without a human rerunning BenchOne — these two numbers
+    // cache?) without a human rerunning JobStats — these two numbers
     // make the line self-defending: gc_ms exposes collector pressure,
     // cpu_util (cpu-sec/wall-sec; up to ~32 on this box, <1 means the
     // process mostly waited) exposes starvation or I/O stalls.
@@ -158,9 +158,9 @@ object Bench {
     val firstPass = SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> timeOne(name, fn)
     }
-    // Outlier retry (best-of-2, only for apparent outliers): the
-    // measured run-to-run variance band on this box is ±5s per query
-    // (DESIGN.md "run-to-run variance band" — GC pauses / page cache),
+    // Outlier retry (best-of-2, only for apparent outliers): back-to-back
+    // identical sweeps swing up to ±5s per query with no code change
+    // (GC pauses / page cache; e.g. q_rolling 6.63 vs 0.99s),
     // which randomly pushes sub-second queries past the 2x-of-DuckDB
     // gate. TWO independent triggers, either earns ONE rerun (report
     // the min — standard best-of-N applied narrowly, so a steady-state
@@ -169,7 +169,7 @@ object Bench {
     //      per-query baseline (only meaningful when that baseline is
     //      >= 0.1s);
     //  (b) absolute-vs-pin: first time exceeds max(3s, 3x the query's
-    //      committed BenchOne steady-state pin from
+    //      committed JobStats steady-state pin from
     //      scripts/benchone_pins.json) — baseline-INDEPENDENT, so the
     //      overhead-floor queries (DuckDB denominator ~0.02s, exempt
     //      from (a) by construction) can no longer ship a 15s noise

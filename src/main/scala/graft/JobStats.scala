@@ -3,12 +3,21 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
-/** Run queries under a SparkListener that counts jobs / stages / tasks
-  * and sums task time — the r21 instrument separating scheduling-bound
-  * queries (wall >> task-time/cores, many tiny sequential jobs) from
-  * compute-bound ones. Same session shape and noop sink as Bench.
+/** Time a chosen subset of SparkEntry.queries, in the order given on
+  * the command line, under a SparkListener that counts jobs / stages /
+  * tasks and sums task time, GC and shuffle bytes — the per-query
+  * instrument for what the full sorted Bench sweep can't isolate
+  * (run-position effects, iterative-operator latency), and for
+  * separating scheduling-bound queries (wall >> task-time/cores, many
+  * tiny sequential jobs) from compute-bound ones. Same session shape,
+  * warm-up and noop sink as Bench.
+  *
+  * Prints one JSON line per run. A failed run reports "sec": -1 and
+  * "ok": false, and the process exits 1 — scripted consumers summing
+  * "sec" must never read a failure as a time.
   *
   * Usage: runMain graft.JobStats [--repeat=N] <q1> [q2 ...]
+  * (sfDir/cpus from env, as for Bench; N defaults to 2)
   */
 object JobStats {
   def main(args: Array[String]): Unit = {
@@ -44,10 +53,10 @@ object JobStats {
         }
       }
     })
-    // poll until the listener counters go quiet (two consecutive 150 ms
-    // samples unchanged, 3 s cap) — a fixed sleep let straggling
-    // onTaskEnd events bleed into the NEXT run's counters on a stalling
-    // box (r21 review find)
+    // the listener bus drains asynchronously: poll until the counters
+    // go quiet (two consecutive 150 ms samples unchanged, 3 s cap) — a
+    // fixed sleep let straggling onTaskEnd events bleed into the NEXT
+    // run's counters on a stalling box (r21 review find)
     def drainListener(): Unit = {
       var prev = (-1, -1L)
       var stable = 0
@@ -66,38 +75,31 @@ object JobStats {
     // drain once after warmup too (r21 ADVICE): without it, warmup
     // straggler onTaskEnd events bled into the FIRST measured run
     drainListener()
-    for (name <- names; r <- 1 to repeat) {
+    val oks = for (name <- names.toSeq; r <- 1 to repeat) yield {
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
       spark.catalog.clearCache()
-      val fn = SparkEntry.queries.getOrElse(name, sys.error(s"unknown $name"))
+      val fn = SparkEntry.queries.getOrElse(name, sys.error(
+        s"unknown query $name; known: ${SparkEntry.queries.keys.toSeq.sorted.mkString(",")}"))
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0); gcMs.set(0)
       shWr.set(0); shRd.set(0)
       val t0 = System.nanoTime()
       val ok =
         try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
         catch { case e: Throwable =>
-          System.err.println(s"[jobstats] $name: $e"); false }
-      val wall = (System.nanoTime() - t0) / 1e9
-      // listener bus drains asynchronously; poll until the counters go
-      // quiet (two consecutive 150 ms samples unchanged, 3 s cap) — a
-      // fixed sleep let straggling onTaskEnd events bleed into the
-      // NEXT run's counters on a stalling box (r21 review find)
-      locally {
-        var prev = (-1, -1L)
-        var stable = 0
-        var waited = 0
-        while (stable < 2 && waited < 3000) {
-          Thread.sleep(150); waited += 150
-          val cur = (tasks.get, taskMs.get)
-          if (cur == prev) stable += 1 else { stable = 0; prev = cur }
-        }
-      }
-      println(f"""{"query":"$name","run":$r,"sec":$wall%.3f,""" +
+          System.err.println(s"[jobstats] $name: $e")
+          e.printStackTrace()
+          false }
+      val wall = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      drainListener()
+      val escaped = name.replace("\\", "\\\\").replace("\"", "\\\"")
+      println(f"""{"query":"$escaped","run":$r,"sec":$wall%.3f,""" +
         s""""jobs":${jobs.get},"stages":${stages.get},"tasks":${tasks.get},""" +
         s""""task_ms":${taskMs.get},"gc_ms":${gcMs.get},""" +
         s""""shuffle_write":${shWr.get},"shuffle_read":${shRd.get},"ok":$ok}""")
+      ok
     }
     spark.stop()
+    if (oks.contains(false)) sys.exit(1)
   }
 }

@@ -42,7 +42,7 @@ case class ReduceOptions(
     /** NumPy parity for nanmedian/nanquantile over a group whose
       * values are ALL NaN: NumPy returns NaN, the repo's default
       * returns SQL NULL (the NA-sentinel convention shared with
-      * min_count masking and fill_value — DESIGN r13's documented
+      * min_count masking and fill_value — a deliberate
       * asymmetry vs nanmean, which coalesces to NaN). With this flag
       * a group holding at least one non-null value but no valid
       * (non-NaN) one yields NaN; a group with NO non-null values at

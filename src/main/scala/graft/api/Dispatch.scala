@@ -25,21 +25,20 @@ import org.apache.spark.sql.functions._
   *     the code the certified queries run, so `auto` can never change
   *     a result — only a plan.
   *
-  * Thresholds are the measured crossover points from the r12–r14
-  * probes, overridable per call:
+  * Thresholds are measured crossover points, overridable per call:
   *
   *   - [[MegaGroupRows]] (default 8M): above this estimated max group
   *     size, buffered exact quantiles (one sorted buffer per group)
   *     and window scans (one task per group) escalate to the
-  *     distributed bracket-search / boundary-carry tiers. QdistProbe:
+  *     distributed bracket-search / boundary-carry tiers. Measured:
   *     buffered wins at 5M pairs/group, loses (or OOMs) at 20M; the
   *     carry ffill ran 2.5× faster than the window ffill at 20M
   *     rows/group (60M rows, 3 groups, local[32]: 39.9 s vs 100.1 s).
   *   - [[HotKeyShare]] (default 0.10): at double-digit key
   *     concentration the events operators escalate to the time-block
-  *     decompositions (SkewProbe: 11× for rolling at 30% hot key;
+  *     decompositions (measured 11× for rolling at a 30% hot key;
   *     as-of/sessionize escalate for the single-task memory wall, not
-  *     wall-clock — the probes measured plain parity at 10M).
+  *     wall-clock — the plain operators measured parity at 10M events).
   */
 object Dispatch {
 

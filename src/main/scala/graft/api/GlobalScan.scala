@@ -3,10 +3,10 @@ package graft.api
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, JoinedRow, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{ArrayTransform, BoundReference, CreateNamedStruct, Expression, GetStructField, If, IsNull, JoinedRow, LambdaFunction, Literal, NamedLambdaVariable, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.optimizer.NormalizeNaNAndZero
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType, StructField, StructType}
 
 /** Global and per-group prefix scans that never put a group on one
   * task.
@@ -45,8 +45,9 @@ import org.apache.spark.sql.types.{DataType, DoubleType, FloatType, LongType, St
   * `order` must totally order rows within each group (include a unique
   * tiebreak key): rows that compare equal could otherwise swap running
   * values between runs. Group keys compare as Spark grouping does (NaN
-  * equals NaN, −0.0 equals 0.0), so every scan agrees with the window
-  * tier ([[GroupByScan]]) on float keys.
+  * equals NaN, −0.0 equals 0.0, also inside struct and array keys), so
+  * every scan agrees with the window tier ([[GroupByScan]]) on float
+  * keys.
   */
 object GlobalScan {
 
@@ -275,6 +276,31 @@ object GlobalScan {
       fold, combine.getOrElse(fold))
   }
 
+  /** A group key with every float/double inside it — top level, struct
+    * fields, array elements — normalized as Spark grouping does (NaN
+    * canonical, −0.0 → 0.0), so keys compare bytewise as UnsafeRows.
+    * Built from public catalyst expressions (`NormalizeFloatingNumbers
+    * .normalize` is `private[sql]`), mirroring its recursion. */
+  private def normalizeFloats(e: Expression): Expression = e.dataType match {
+    case t if !hasFloats(t) => e
+    case FloatType | DoubleType => NormalizeNaNAndZero(e)
+    case st: StructType =>
+      val struct = CreateNamedStruct(st.fields.toSeq.zipWithIndex.flatMap {
+        case (f, i) => Seq(Literal(f.name), normalizeFloats(GetStructField(e, i)))
+      })
+      If(IsNull(e), Literal(null, struct.dataType), struct)
+    case ArrayType(et, containsNull) =>
+      val x = NamedLambdaVariable("x", et, containsNull)
+      ArrayTransform(e, LambdaFunction(normalizeFloats(x), Seq(x)))
+  }
+
+  private def hasFloats(t: DataType): Boolean = t match {
+    case FloatType | DoubleType => true
+    case st: StructType => st.fields.exists(f => hasFloats(f.dataType))
+    case ArrayType(et, _) => hasFloats(et)
+    case _ => false
+  }
+
   /** The one two-pass scan kernel. `fold` is a null-identity per-row
     * step over the value's external JVM type (state := fold(state,
     * value), null state = empty); `combine` merges two non-empty
@@ -309,10 +335,7 @@ object GlobalScan {
     val vType = parted.schema(vIdx).dataType
     val toScala = CatalystTypeConverters.createToScalaConverter(vType)
     val keyExprs: Seq[Expression] = groupCols.map(df.schema.fieldIndex).map { i =>
-      val ref = BoundReference(i, fields(i).dataType, fields(i).nullable)
-      if (ref.dataType == FloatType || ref.dataType == DoubleType)
-        NormalizeNaNAndZero(ref)
-      else ref
+      normalizeFloats(BoundReference(i, fields(i).dataType, fields(i).nullable))
     }
     // folds one sorted partition: the first group starts from carryIn,
     // every later group from empty

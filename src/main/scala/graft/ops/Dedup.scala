@@ -576,7 +576,7 @@ object Dedup {
     * it the joins run un-hinted and AQE decides. Two thresholds
     * because the broadcast payloads differ by orders of magnitude:
     * id-pair rows are ~tens of bytes, shingle rows are KBs. */
-  private def idBroadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
+  private[ops] def idBroadcastThreshold(spark: org.apache.spark.sql.SparkSession): Long =
     spark.conf.getOption("spark.graft.dedup.idBroadcastThreshold")
       .map(_.toLong).getOrElse(1L << 22)
 
@@ -620,7 +620,7 @@ object Dedup {
     // spark.sql.optimizer.runtime.bloomFilter.maxNumBits cap (2^26 =
     // 8 MiB) silently UNDERSIZES the filter past ~4M keys — measured
     // 14% over-drop at 8M keys where the requested fpp=0.001 promises
-    // 0.4% (StreamBloomProbe found it). treeAggregate honors the
+    // 0.4%. treeAggregate honors the
     // requested sizing at any key count; the merge fan-in bounds
     // per-step traffic to O(log partitions) filter copies.
     val keys = requireCfg(index, cfg)

@@ -124,8 +124,7 @@ object Pii {
     * (two contains + one two-digit rlike) versus six-pattern find
     * loops: on a real crawl where PII incidence is low this collapses
     * the per-row cost to the prefilter; on an all-PII corpus it adds
-    * only the prefilter scans (the r12 DESIGN "sparse-PII regime"
-    * item). (?s) so digits split across lines still match. */
+    * only the prefilter scans. (?s) so digits split across lines still match. */
   def mayContainPii(text: Column): Column =
     // one codegen'd byte scan (TextKernels.mayContainPii) — the
     // contains/rlike Column formulation it replaces cost about as much

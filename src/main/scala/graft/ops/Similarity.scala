@@ -568,9 +568,7 @@ object Similarity {
       centroids, threshold, delta, queryProbes)
       .select(col("id_batch").as(idCol)).distinct()
       .localCheckpoint()
-    val thresholdRows = batch.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
+    val thresholdRows = graft.ops.Dedup.idBroadcastThreshold(batch.sparkSession)
     val hinted = if (dup.count() <= thresholdRows) broadcast(dup) else dup
     batch.join(hinted, Seq(idCol), "left_anti")
   }
@@ -805,9 +803,7 @@ object Similarity {
       .distinct()
       .localCheckpoint() // two consumers: the id pull + the pair join
     val candIds = cand.select("id_corpus").distinct()
-    val thresholdRows = batch.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
+    val thresholdRows = graft.ops.Dedup.idBroadcastThreshold(batch.sparkSession)
     val pinnedIds = candIds.localCheckpoint()
     val nCandIds = pinnedIds.count()
     val hinted =
@@ -818,18 +814,18 @@ object Similarity {
       .join(hinted, Seq("id_corpus"))
       .withColumn("__nc", norm(col("__vc")))
     // batch vectors re-attached ONCE for the exact verify — a map-only
-    // derivation off the batch (never the index), candidate-id-pruned
-    // and broadcast under the same gate as the sliver ids so the
-    // pair-sized side is never shuffled by the attach join (the §8
-    // "attach the plan without sneaking the shuffle back in" rule)
+    // derivation off the batch (never the index), always pruned to the
+    // candidate batch ids, and broadcast under the same gate as the
+    // sliver ids so the pair-sized side is never shuffled by the attach
+    // join (the §8 "attach the plan without sneaking the shuffle back
+    // in" rule); over the gate only the hints drop, never the prune
     val bVecs0 = e.select(col("__id").as("id_batch"),
       col("__v").as("__vb"), col("__n").as("__nb"))
+    val bIds = cand.select("id_batch").distinct()
     val bVecs =
       if (nCandIds <= thresholdRows)
-        broadcast(bVecs0.join(
-          broadcast(cand.select("id_batch").distinct()),
-          Seq("id_batch"), "left_semi"))
-      else bVecs0
+        broadcast(bVecs0.join(broadcast(bIds), Seq("id_batch"), "left_semi"))
+      else bVecs0.join(bIds, Seq("id_batch"), "left_semi")
     // cand/pinnedIds checkpoints stay pinned while the result is
     // consumed (they are sliver-sized); release with
     // [[graft.api.Caches.release]] once done, the semanticNearDupPairs
@@ -864,9 +860,7 @@ object Similarity {
       threshold, margin, delta, queryProbes)
       .select(col("id_batch").as(idCol)).distinct()
       .localCheckpoint()
-    val thresholdRows = batch.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
+    val thresholdRows = graft.ops.Dedup.idBroadcastThreshold(batch.sparkSession)
     val hinted = if (dup.count() <= thresholdRows) broadcast(dup) else dup
     batch.join(hinted, Seq(idCol), "left_anti")
   }
@@ -939,9 +933,7 @@ object Similarity {
       centroids, cb, m, codesPerSub, topK * refineFactor, nProbe)
       .select("query_id", "neighbor_id")
       .localCheckpoint() // two consumers: the id pull + the refine join
-    val thresholdRows = queries.sparkSession.conf
-      .getOption("spark.graft.dedup.idBroadcastThreshold")
-      .map(_.toLong).getOrElse(1L << 22)
+    val thresholdRows = graft.ops.Dedup.idBroadcastThreshold(queries.sparkSession)
     val ids = shortlist.select("neighbor_id").distinct().localCheckpoint()
     val hinted = if (ids.count() <= thresholdRows) broadcast(ids) else ids
     val sliver = vectors

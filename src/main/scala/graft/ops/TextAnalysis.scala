@@ -243,7 +243,7 @@ object TextAnalysis {
     // shuffle on the doc key, but the window exec's full sort of every
     // (doc, term) row by score is replaced by per-doc sorts of
     // doc-length-bounded term lists — measured 0.54 s → 0.49 s warm at
-    // sf0.1 (r15 PinAttackProbe). The struct sorts ascending on
+    // sf0.1. The struct sorts ascending on
     // (−tfidf, term) ≡ (tfidf DESC, term ASC), the window's exact
     // order (negation is injective on the strictly positive scores).
     // The dfreq side stays an UNHINTED equi-join: a forced broadcast

@@ -1,7 +1,12 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, MapType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import scala.reflect.ClassTag
 
 /** URL / domain curation operators — the stage every web-crawl
   * training pipeline runs BEFORE text analysis: canonicalize the URL,
@@ -238,8 +243,8 @@ object Web {
     * per-domain volume cap. One shuffle on the domain via the
     * k-BOUNDED heap aggregation ([[Selection.topKPerGroupBounded]]):
     * a mega-domain holding 10% of the crawl costs O(k) state per
-    * stage, not a full window sort of its rows on one task. Priced
-    * honestly (WebScaleProbe act f): the heap pays ~1.8× CPU locally
+    * stage, not a full window sort of its rows on one task. Measured
+    * cost: the heap pays ~1.8× CPU locally
     * vs Tungsten's window sort — it is chosen for the DISTRIBUTION
     * property (no unbounded single-task sort when one registered
     * domain holds 10⁸ rows), which is what a cap exists for. */
@@ -957,26 +962,38 @@ object Web {
     * engine-independent — and the whole trajectory is certifiable
     * against an unrolled SQL replica with NO float tolerance.
     *
-    * Scale: edges checkpoint once (reused every round); each
-    * round is ONE shuffle (the contribution aggregation on dst) plus
-    * an edges⋈ranks equi-join where ranks is |V|-bounded (domains,
-    * not pages — millions, not billions; broadcastable by AQE);
-    * lineage is cut per round so the plan stays flat at any iteration
-    * count.
+    * Scale: one RDD fixed-point loop (the connectedComponents
+    * precedent — per-round Catalyst re-planning plus a per-round
+    * checkpoint job is pure overhead for a fixed point). The adjacency
+    * (src, (dst, outdeg)) and the node set are hash-partitioned once
+    * and cached; each round is join → map → reduceByKey →
+    * leftOuterJoin, all on that partitioner, so every join is narrow
+    * against the cache and a round costs the contribution shuffle on
+    * dst. Ranks are |V|-bounded (domains, not pages — millions, not
+    * billions). With no per-round action, the whole loop runs as one
+    * job at the final `localCheckpoint`.
     *
-    * Checkpoint durability (r18 verdict #5): the default
-    * `localCheckpoint` is EXECUTOR-MEMORY-resident and not
-    * fault-tolerant — on a real cluster one lost executor kills the
-    * job mid-iteration. `reliable = true` routes every per-round cut
-    * through `Dataset.checkpoint` (HDFS/object-store files under
-    * `spark.sparkContext.setCheckpointDir`, which must be set — a
+    * Node ids may be of any type Spark can group on except map values
+    * (refused up front): they key the loop by value, so −0.0 = 0.0,
+    * NaN = NaN and binary ids compare by content as in Spark grouping,
+    * and the output `node` column keeps the input type. The output
+    * `rank` column is non-nullable for every input (every ranked node
+    * has a rank). Null endpoints (a
+    * schemeless/garbage URL upstream yields a null domain) cannot vote
+    * or be ranked — the edge is dropped at entry rather than letting a
+    * null node ride the joins as a phantom vertex.
+    *
+    * Checkpoint durability: the default `localCheckpoint` is
+    * EXECUTOR-MEMORY-resident and not fault-tolerant — on a real
+    * cluster one lost executor kills the job mid-iteration.
+    * `reliable = true` writes RDD checkpoint files under
+    * `spark.sparkContext.setCheckpointDir` (which must be set — a
     * missing dir is refused up front, not at iteration 1's write):
-    * each round then restarts from durable files instead of
-    * recomputing, at the price of one write+read of |E| (once) and
-    * |V| (per round) — the right trade for a 100-TB-cluster run,
-    * priced in DESIGN. Same values bit-for-bit either way (WebSpec
-    * law: the snapped trajectory does not depend on how lineage is
-    * cut). */
+    * the adjacency and node set once, then every round's ranks, each
+    * materialized by one action, so a lost executor replays from the
+    * last round's files. Price: one write+read of |E| once and |V| per
+    * round. Same values bit-for-bit either way (WebSpec law: the
+    * snapped trajectory does not depend on how lineage is cut). */
   def domainRank(edges: DataFrame, srcCol: String, dstCol: String,
                  iterations: Int, damping: Double = 0.85,
                  reliable: Boolean = false): DataFrame = {
@@ -989,110 +1006,89 @@ object Web {
         "domainRank(reliable = true) needs " +
           "spark.sparkContext.setCheckpointDir(...) — reliable " +
           "checkpoints are files under that directory")
-    // The default (localCheckpoint-lineage, string-keyed) path runs the
-    // RDD loop below (r22 — the connectedComponents precedent: a
-    // fixed-point is the one shape where per-round Catalyst re-planning
-    // + a per-round checkpoint job is pure overhead; the RDD loop is
-    // ONE job whose cached adjacency joins NARROW every round). The
-    // DataFrame loop remains for reliable=true (durable per-round
-    // checkpoint FILES — the 100-TB-cluster posture) and for
-    // non-string node types; WebSpec's reliable≡local law now
-    // cross-checks the two implementations bit-for-bit, which the
-    // exact-dyadic snap arithmetic guarantees: every summed term is an
-    // exact 2^-20 multiple, so sums are order-independent, and the
-    // per-row ops (divide, multiply, add, floor) are identical
-    // correctly-rounded IEEE ops in both loops.
-    val stringKeys =
-      edges.schema(srcCol).dataType == org.apache.spark.sql.types.StringType &&
-      edges.schema(dstCol).dataType == org.apache.spark.sql.types.StringType
-    if (!reliable && stringKeys)
-      return domainRankRdd(edges, srcCol, dstCol, iterations, damping)
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
-    val snapUnit = lit(1048576.0) // 2^20
-    // grid-clearance guard (r22, the trainCertified posture): a value
-    // within 1e-9 of a floor boundary (in the scaled domain, grid step
-    // 1.0) is refused LOUDLY — engines computing 1 ulp apart could
-    // floor to different grid cells and silently diverge from the
-    // oracle. Values exactly ON the boundary are fine (identical
-    // doubles floor identically); cross-engine jitter for these exact
-    // dyadic sums is 0-1 ulp (~1e-16 relative), so 1e-9 gives ~7
-    // decades of margin while firing spuriously with probability
-    // ~2e-9 per snapped value.
-    def snap(c: Column): Column = {
-      val scaled = c * snapUnit
-      val frac = scaled - floor(scaled)
-      when(frac === 0.0 || (frac > 1e-9 && frac < lit(1.0) - lit(1e-9)),
-        floor(scaled) / snapUnit)
-        .otherwise(raise_error(concat(
-          lit("domainRank grid-clearance guard: a rank term sits within " +
-            "1e-9 of a 2^-20 floor boundary — cross-engine rounding " +
-            "could diverge; change damping/iterations (value "),
-          c.cast("string"), lit(")"))))
+    val spark = edges.sparkSession
+    // the node type is the one a union of the two endpoint columns
+    // resolves to (analysis only, no job)
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val nodeType = e.select(col("src").as("node"))
+      .unionByName(e.select(col("dst").as("node"))).schema("node").dataType
+    def byValue(t: DataType): Boolean = t match {
+      case _: MapType => false
+      case s: StructType => s.fields.forall(f => byValue(f.dataType))
+      case a: ArrayType => byValue(a.elementType)
+      case _ => true
     }
-    // null endpoints (a schemeless/garbage URL upstream yields a null
-    // domain) cannot vote or be ranked — drop them here rather than
-    // letting a null node ride the joins as a phantom vertex
-    val e = cut(edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-      .na.drop())
-    val nodes = cut(e.select(col("src").as("node"))
-      .unionByName(e.select(col("dst").as("node")))
-      .distinct())
-    val esd = cut(
-      e.join(e.groupBy("src").agg(count(lit(1)).as("__deg")), "src"))
-    var ranks = nodes.select(col("node"), lit(1.0).as("rank"))
-    for (_ <- 1 to iterations) {
-      val contrib = esd
-        .join(ranks, esd("src") === ranks("node"))
-        .select(col("dst").as("node"),
-          snap(col("rank") / col("__deg")).as("__c"))
-      val summed = contrib.groupBy("node").agg(sum("__c").as("__s"))
-      ranks = cut(nodes.join(summed, Seq("node"), "left")
-        .select(col("node"),
-          snap(lit(1.0 - damping) +
-            lit(damping) * coalesce(col("__s"), lit(0.0))).as("rank")))
+    require(byValue(nodeType), s"domainRank: node ids of type " +
+      s"${nodeType.simpleString} do not compare by value (map values " +
+      "are refused) — cast them to a comparable type")
+    val pairs = e.select(col("src").cast(nodeType), col("dst").cast(nodeType))
+      .na.drop().rdd.map(r => (nodeKey(r.get(0)), nodeKey(r.get(1))))
+    val schema = StructType(Seq(StructField("node", nodeType),
+      StructField("rank", DoubleType, nullable = false)))
+    // the keys' ClassTag picks the shuffle serializer: Spark uses Kryo
+    // for String keys, Java serialization for Any (2,871 vs 5,522
+    // shuffle bytes for q_domain_rank at sf0.1)
+    val keyTag = (if (nodeType == StringType) ClassTag(classOf[String])
+      else ClassTag.Any).asInstanceOf[ClassTag[Any]]
+    rankLoop(pairs, keyTag, iterations, damping, reliable) { ranks =>
+      spark.createDataFrame(
+        ranks.map { case (k, r) => Row(nodeValue(k), r) }, schema)
     }
-    ranks
   }
 
-  /** The default-path RDD fixed-point loop for [[domainRank]] (r22):
-    * same recurrence, same 2^-20 floor snap, same grid-clearance
-    * guard, bit-identical values (exact-dyadic summation is
-    * order-independent; per-row IEEE ops identical) — WebSpec pins the
-    * equality against the DataFrame loop via the reliable≡local law.
-    * Shape: the adjacency (src, (dst, outdeg)) is partitioned once and
-    * cached; each round is join → map → reduceByKey → leftOuterJoin,
-    * all on the SAME partitioner (narrow against the cache), with NO
-    * per-round action or checkpoint — the whole loop materializes as
-    * one job at the final localCheckpoint, so per-round cost is three
-    * small shuffles instead of Catalyst re-plan + checkpoint job. */
-  private def domainRankRdd(edges: DataFrame, srcCol: String,
-                            dstCol: String, iterations: Int,
-                            damping: Double): DataFrame = {
-    import org.apache.spark.HashPartitioner
-    import org.apache.spark.storage.StorageLevel
-    val spark = edges.sparkSession
-    import spark.implicits._
-    def snapChecked(x: Double): Double = {
-      val scaled = x * 1048576.0
-      val fl = math.floor(scaled)
-      val frac = scaled - fl
-      // same guard and thresholds as the DataFrame path's snap()
-      require(frac == 0.0 || (frac > 1e-9 && frac < 1.0 - 1e-9),
-        s"domainRank grid-clearance guard: a rank term sits within " +
-          s"1e-9 of a 2^-20 floor boundary — cross-engine rounding " +
-          s"could diverge; change damping/iterations (value $x)")
-      fl / 1048576.0
+  /** An array node id as a Row, whose equality (unlike a Seq's) holds
+    * NaN = NaN element-wise. */
+  private case class ArrayKey(elems: Row)
+
+  /** A binary node id with content equality (an `Array[Byte]` compares
+    * by reference). */
+  private final class BinaryKey(val bytes: Array[Byte]) extends Serializable {
+    override def equals(o: Any): Boolean = o match {
+      case b: BinaryKey => java.util.Arrays.equals(bytes, b.bytes)
+      case _ => false
     }
-    val eRdd = edges.select(col(srcCol).as("_1"), col(dstCol).as("_2"))
-      .na.drop().as[(String, String)].rdd
-    val part = new HashPartitioner(math.max(eRdd.getNumPartitions, 1))
-    val e = eRdd.partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
+    override def hashCode: Int = java.util.Arrays.hashCode(bytes)
+  }
+
+  /** A node id as an RDD key that groups as Spark grouping does:
+    * −0.0 folds into 0.0, NaN equals NaN (`Double.equals`,
+    * `Row.equals`), binary compares by content, recursively through
+    * structs and arrays. */
+  private def nodeKey(v: Any): Any = v match {
+    case d: Double => if (d == 0.0) 0.0 else d
+    case f: Float => if (f == 0.0f) 0.0f else f
+    case b: Array[Byte] => new BinaryKey(b)
+    case r: Row => Row.fromSeq(r.toSeq.map(nodeKey))
+    case s: scala.collection.Seq[_] => ArrayKey(Row.fromSeq(s.map(nodeKey).toSeq))
+    case other => other
+  }
+
+  /** [[nodeKey]]'s inverse: the external value `createDataFrame` takes. */
+  private def nodeValue(k: Any): Any = k match {
+    case b: BinaryKey => b.bytes
+    case ArrayKey(r) => r.toSeq.map(nodeValue)
+    case r: Row => Row.fromSeq(r.toSeq.map(nodeValue))
+    case other => other
+  }
+
+  /** The one [[domainRank]] fixed-point loop over (src, dst) key pairs;
+    * `write` turns the final (node, rank) RDD into the result frame. */
+  private def rankLoop(pairs: RDD[(Any, Any)], keyTag: ClassTag[Any],
+                       iterations: Int, damping: Double, reliable: Boolean)(
+                       write: RDD[(Any, Double)] => DataFrame): DataFrame = {
+    implicit val kt: ClassTag[Any] = keyTag
+    val level = StorageLevel.MEMORY_AND_DISK
+    // reliable mode: checkpoint files, written by one materializing
+    // action (the RDD is persisted first, so the write reads the cache)
+    def durable[T](rdd: RDD[T]): Unit = { rdd.checkpoint(); rdd.count() }
+    val part = new HashPartitioner(math.max(pairs.getNumPartitions, 1))
+    val e = pairs.partitionBy(part).persist(level)
     val deg = e.mapValues(_ => 1L).reduceByKey(part, _ + _)
-    val esd = e.join(deg, part).persist(StorageLevel.MEMORY_AND_DISK)
+    val esd = e.join(deg, part).persist(level)
     val nodes = e.flatMap { case (s, d) => Iterator((s, ()), (d, ())) }
       .reduceByKey(part, (a, _) => a)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .persist(level)
+    if (reliable) { durable(esd); durable(nodes) }
     val oneMinusD = 1.0 - damping
     var ranks = nodes.mapValues(_ => 1.0)
     for (_ <- 1 to iterations) {
@@ -1100,17 +1096,48 @@ object Web {
         case (_, ((dst, dg), rank)) => (dst, snapChecked(rank / dg))
       }
       val summed = contrib.reduceByKey(part, _ + _)
+      val prev = ranks
       ranks = nodes.leftOuterJoin(summed, part).mapValues {
         case (_, so) => snapChecked(oneMinusD + damping * so.getOrElse(0.0))
       }
+      if (reliable) {
+        durable(ranks.persist(level))
+        prev.unpersist(false)
+      }
     }
     // one materializing pin (the CC convention): construction runs the
-    // loop's job here; loop caches release afterwards
-    val out = ranks.toDF("node", "rank").localCheckpoint()
+    // loop's job here; loop caches release afterwards. Reliable ranks
+    // already read from their round files.
+    val out = if (reliable) write(ranks) else write(ranks).localCheckpoint()
+    ranks.unpersist(false)
     esd.unpersist(false)
     nodes.unpersist(false)
     e.unpersist(false)
     out
+  }
+
+  /** Floor-snaps one rank term to a 2^-20 multiple, refusing a value
+    * within max(1e-12, 4 ulps) of a floor boundary in the scaled
+    * domain (grid step 1.0): engines computing a few ulps apart there
+    * could floor to different cells and silently diverge from the
+    * oracle. Values exactly ON a boundary are fine (identical doubles
+    * floor identically). The clearance is relative to the scaled
+    * value's ulp because a nonzero fraction is a multiple of that ulp,
+    * so an absolute clearance below one ulp could never fire (from
+    * 2^13 up, i.e. every rank update, whose value is at least
+    * 1 − damping). The 1e-12 floor must stay below the fractions legal
+    * input reaches: a term over an out-degree of 2^31 scales to
+    * fractions of 2^-31 ≈ 4.7e-10, which a 1e-9 clearance refused. */
+  private[graft] def snapChecked(x: Double): Double = {
+    val scaled = x * 1048576.0
+    val fl = math.floor(scaled)
+    val frac = scaled - fl
+    val clr = math.max(1e-12, 4 * math.ulp(scaled))
+    require(frac == 0.0 || (frac > clr && frac < 1.0 - clr),
+      s"domainRank grid-clearance guard: a rank term sits within " +
+        s"$clr of a 2^-20 floor boundary — cross-engine rounding " +
+        s"could diverge; change damping/iterations (value $x)")
+    fl / 1048576.0
   }
 
   /** Crawl-budget allocation: per-domain budgets ∝ rank^(1/T) — the

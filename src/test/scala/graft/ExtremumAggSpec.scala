@@ -90,8 +90,8 @@ class ExtremumAggSpec extends SparkTestBase {
     // 128) DISTINCT keys per task. 4000 groups through 2 partitions puts
     // every task deep into the fallback — the first-order regime at
     // millions of groups per 100 TB job — and the answers must be
-    // identical to the hash path's. Probe-measured cost of the fallback
-    // on scalar-pair buffers: ~3-5% (DESIGN r10 note), so the default
+    // identical to the hash path's. Measured cost of the fallback
+    // on scalar-pair buffers: ~3-5%, so the default
     // threshold stays; this test pins that the regime is CORRECT.
     val rows = (0 until 40000).map { i =>
       val k = i % 4000

@@ -621,10 +621,16 @@ class GlobalScanSpec extends SparkTestBase {
         Seq(Some(5.0), None, None, Some(7.0), None, None, None))
       .zipWithIndex.map { case ((g, v), i) => (g, i, v) }
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try for (parts <- Seq(3, 8); keyType <- Seq("double", "float")) {
+    try for (parts <- Seq(3, 8);
+             keyType <- Seq("double", "float", "struct<d: double>",
+               "array<double>")) {
       spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+      val key =
+        if (keyType.startsWith("struct")) struct(col("g").as("d"))
+        else if (keyType.startsWith("array")) array(col("g"))
+        else col("g").cast(keyType)
       val df = data.toDF("g", "i", "v")
-        .withColumn("g", col("g").cast(keyType)).repartition(2)
+        .withColumn("g", key).repartition(2)
       val clue = s"shufflePartitions=$parts keys=$keyType"
       def byI(d: org.apache.spark.sql.DataFrame, out: String): Seq[Any] =
         d.orderBy("i").select(out).collect().map(_.get(0)).toSeq

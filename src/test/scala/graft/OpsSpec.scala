@@ -505,6 +505,46 @@ class OpsSpec extends SparkTestBase {
         "vec_id", "embedding", cents, cb, m, k2)))
   }
 
+  test("PQ two-phase pairs over the id broadcast gate (threshold 0): " +
+    "the same pairs as the broadcast branch, and the batch vectors " +
+    "stay semi-join-pruned to the candidate ids") {
+    import spark.implicits._
+    val cb = Array(0.0, 1.0, 0.0, 1.0)
+    val cents = Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+      .toDF("cid", "cv")
+    val corpus = Seq((1L, Seq(1.0f, 0.0f)), (2L, Seq(0.0f, 1.0f)),
+      (3L, Seq(0.6f, 0.8f))).toDF("vec_id", "embedding")
+    val batch = Seq((6L, Seq(1.0f, 0.0f)), (5L, Seq(0.55f, 0.835f)),
+      (7L, Seq(0.3f, 0.2f)), (8L, Seq(0.0f, 0.99f))).toDF("vec_id", "embedding")
+    val idxPq = Similarity.semanticCellIndexPq(corpus, "vec_id",
+      "embedding", cents, cb, 2, 2)
+    def run() = Similarity.semanticNearDupsAgainstIndexPq(batch, "vec_id",
+      "embedding", idxPq, corpus, "vec_id", "embedding", cents, cb, 2, 2,
+      threshold = 0.95)
+    def semiJoins(df: org.apache.spark.sql.DataFrame) =
+      "\\bLeftSemi\\b".r.findAllIn(df.queryExecution.executedPlan.toString).size
+    def pairSet(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_batch", "id_corpus", "sim").collect()
+        .map(r => (r.getLong(0), r.getLong(1),
+          math.round(r.getDouble(2) * 1e6))).toSet
+    val hinted = run()
+    val (hintedSemis, hintedPairs) = (semiJoins(hinted), pairSet(hinted))
+    // the exact verify makes the pairs the vector tier's
+    assert(hintedPairs === pairSet(Similarity.semanticNearDupsAgainstIndex(
+      batch, "vec_id", "embedding", Similarity.semanticCellIndex(corpus,
+        "vec_id", "embedding", cents), cents, threshold = 0.95)))
+    assert(hintedPairs.map(p => (p._1, p._2)) === Set((6L, 1L), (5L, 3L),
+      (8L, 2L)), s"$hintedPairs")
+    assert(hintedSemis >= 1, hinted.queryExecution.executedPlan.toString)
+    try {
+      spark.conf.set("spark.graft.dedup.idBroadcastThreshold", "0")
+      val gated = run()
+      assert(semiJoins(gated) === hintedSemis,
+        gated.queryExecution.executedPlan.toString)
+      assert(pairSet(gated) === hintedPairs)
+    } finally spark.conf.unset("spark.graft.dedup.idBroadcastThreshold")
+  }
+
   test("PQ streaming ADC plan: candidate-grain over-drop only — every " +
     "exact-mirror drop is PQ-dropped (per-row bound ⇒ screen " +
     "recall 1), survivors are a subset of the exact mirror's, and the " +

@@ -287,6 +287,95 @@ class WebSpec extends SparkTestBase {
     assert(files > 1, "reliable mode must write checkpoint files")
   }
 
+  test("domainRank grid-clearance guard: a legal term over an " +
+    "out-degree of 2^31 snaps; a term within max(1e-12, 4 ulps) of a " +
+    "floor boundary is refused, at unit and at rank scale") {
+    // rank 2048 + 2^-20 over out-degree 2^31 is 2^-20 + 2^-51: scaled
+    // by 2^20 it is exactly 1 + 2^-31 (fraction 4.66e-10, every op
+    // exact), so it must floor to the 2^-20 grid cell
+    val deg = math.pow(2, 31)
+    val legal = (2048.0 + math.pow(2, -20)) / deg
+    assert(legal * 1048576.0 === 1.0 + math.pow(2, -31))
+    assert(Web.snapChecked(legal) === math.pow(2, -20))
+    // scaled value 1 + 2^-50: within 1e-12 of the boundary
+    val near = (1.0 + math.pow(2, -50)) / 1048576.0
+    assert(near * 1048576.0 === 1.0 + math.pow(2, -50))
+    val e = intercept[IllegalArgumentException](Web.snapChecked(near))
+    assert(e.getMessage.contains("grid-clearance guard"), e.getMessage)
+    // rank scale: 1 + 2^-52 scales to 2^20 + 2^-32, one ulp above a
+    // boundary (an absolute 1e-12 clearance is below that ulp there);
+    // five ulps clear the 4-ulp band
+    val ulp1 = (1.0 + math.pow(2, -52)) * 1048576.0 - 1048576.0
+    assert(ulp1 === math.pow(2, -32))
+    val r = intercept[IllegalArgumentException](
+      Web.snapChecked(1.0 + math.pow(2, -52)))
+    assert(r.getMessage.contains("grid-clearance guard"), r.getMessage)
+    assert(Web.snapChecked(1.0 + 5 * math.pow(2, -52)) === 1.0)
+    // values on the grid pass unchanged
+    assert(Web.snapChecked(0.75) === 0.75)
+  }
+
+  test("domainRank over Long, double, binary, struct and array node ids " +
+    "equals the string-keyed ranks of the same graph and keeps the node " +
+    "type; -0.0/0.0, nested NaN and equal-content binary ids are one " +
+    "node each; rank is non-nullable") {
+    val ids = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (3L, 4L),
+      (5L, 1L), (1L, 2L))
+    val byLong = Web.domainRank(ids.toDF("src", "dst"), "src", "dst", 5)
+    assert(byLong.schema("node").dataType ===
+      org.apache.spark.sql.types.LongType)
+    val longRanks = byLong.collect()
+      .map(r => r.getLong(0).toString -> r.getDouble(1)).toMap
+    val strRanks = Web.domainRank(
+        ids.map { case (a, b) => (a.toString, b.toString) }.toDF("src", "dst"),
+        "src", "dst", 5)
+      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
+    assert(longRanks === strRanks)
+    assert(longRanks.keySet === Set("1", "2", "3", "4", "5"))
+    assert(!byLong.schema("rank").nullable)
+    // binary ids, top level and inside a struct: every row holds its own
+    // byte array, so they must key by content
+    val bin = ids.map { case (a, b) => (Array(a.toByte), Array(b.toByte)) }
+      .toDF("s", "d")
+    for ((wrap, read) <- Seq[(String => org.apache.spark.sql.Column,
+        org.apache.spark.sql.Row => Array[Byte])](
+      (c => col(c), _.getAs[Array[Byte]](0)),
+      (c => struct(col(c).as("v")), _.getStruct(0).getAs[Array[Byte]](0)))) {
+      val ranked = Web.domainRank(
+        bin.select(wrap("s").as("src"), wrap("d").as("dst")), "src", "dst", 5)
+      assert(ranked.schema("node").dataType ===
+        bin.select(wrap("s")).schema.head.dataType)
+      assert(ranked.collect().map(r => read(r).head.toString -> r.getDouble(1))
+        .toMap === strRanks)
+    }
+    // node 1 is -0.0 as a source and 0.0 as a target, node 5 is NaN
+    def asDouble(n: Long, src: Boolean): Double =
+      if (n == 1L) (if (src) -0.0 else 0.0)
+      else if (n == 5L) Double.NaN else n.toDouble
+    def name(d: Double): String =
+      if (d == 0.0) "1" else if (d.isNaN) "5" else d.toLong.toString
+    val dbl = ids.map { case (a, b) => (asDouble(a, true), asDouble(b, false)) }
+      .toDF("s", "d")
+    for ((wrap, read) <- Seq[(String => org.apache.spark.sql.Column,
+        org.apache.spark.sql.Row => Double)](
+      (c => struct(col(c).as("v")), _.getStruct(0).getDouble(0)),
+      (c => array(col(c)), _.getSeq[Double](0).head))) {
+      val ranked = Web.domainRank(
+        dbl.select(wrap("s").as("src"), wrap("d").as("dst")), "src", "dst", 5)
+      assert(ranked.schema("node").dataType ===
+        dbl.select(wrap("s")).schema.head.dataType)
+      assert(ranked.collect().map(r => name(read(r)) -> r.getDouble(1)).toMap
+        === strRanks)
+    }
+    // top-level double ids: -0.0 and 0.0 are one node (a NaN id, like a
+    // null, drops its edge at entry, so node 5 stays 5.0 here)
+    val top = Web.domainRank(ids.map { case (a, b) =>
+        (if (a == 1L) -0.0 else a.toDouble, if (b == 1L) 0.0 else b.toDouble)
+      }.toDF("src", "dst"), "src", "dst", 5)
+    assert(top.collect().map(r => name(r.getDouble(0)) -> r.getDouble(1)).toMap
+      === strRanks)
+  }
+
   test("crawlBudgetsDf ≡ crawlBudgets (Map form) bit-exactly — " +
     "integral and non-integral 1/T, zero-rank domains, partition-" +
     "invariant; plan's only join is the broadcast 1-row total") {
